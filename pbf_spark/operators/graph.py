@@ -20,13 +20,21 @@ published fix is the large-star/small-star contraction (Kiveris et al.,
 module's API admits as a drop-in (same edge-list in, labels out).
 Driver actions: exactly one ``count()`` per round (the convergence
 check), bounded by ``max_iter`` — the same bounded-driver-round-trip
-pattern as knn_join's ring expansion (knn.py).
+pattern as knn_join's ring expansion (knn.py) — plus the result's
+checkpoint.
+
+Storage: every checkpoint a call makes belongs to its ``CallScope``
+(util.py). A round's checkpoint is freed as soon as the next round
+supersedes it, the rest when the call returns or raises; the labels
+come back as one eager checkpoint the caller owns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..util import CallScope
 
 
 def connected_components(
@@ -47,135 +55,50 @@ def connected_components(
     Raises ``RuntimeError`` if ``max_iter`` rounds pass without
     convergence (diameter > max_iter — raise it, or pre-contract).
     """
-    # Materialize the symmetrized edge list ONCE: every round joins
-    # against it, and without the checkpoint each round re-executes the
-    # edge list's ENTIRE upstream pipeline (for near-dup clustering that
-    # is the full tokenize→minhash→LSH-join→verify computation — measured
-    # as a per-round repeat of the whole LSH cost before this fix).
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .localCheckpoint(eager=False)
-    )
-
-    labels = sym.select(F.col("a").alias("id")).distinct()
-    if vertices is not None:
-        labels = labels.union(vertices.select(F.col(vertices.columns[0]).alias("id"))).distinct()
-    labels = labels.select("id", F.col("id").alias("component")).localCheckpoint()
-    prev = labels
-
-    # free each round's superseded checkpoint (executor storage would
-    # otherwise grow linearly with rounds)
-    from ..util import release_checkpoint as _release
-
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("component").alias("_nbr"))
+    with CallScope() as scope:
+        # Materialize the symmetrized edge list ONCE: every round joins
+        # against it, and without the checkpoint each round re-executes the
+        # edge list's ENTIRE upstream pipeline (for near-dup clustering that
+        # is the full tokenize→minhash→LSH-join→verify computation — measured
+        # as a per-round repeat of the whole LSH cost before this fix).
+        sym = scope.own(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .where(F.col("a") != F.col("b"))
+            .localCheckpoint(eager=False)
         )
-        merged = (
-            labels.join(nbr_min, labels.id == nbr_min.a, "left")
-            .select(
-                "id",
-                "component",
-                F.least("component", F.coalesce("_nbr", "component")).alias("_new"),
+
+        labels = sym.select(F.col("a").alias("id")).distinct()
+        if vertices is not None:
+            labels = labels.union(
+                vertices.select(F.col(vertices.columns[0]).alias("id"))
+            ).distinct()
+        prev = scope.own(labels.select("id", F.col("id").alias("component")).localCheckpoint())
+        labels = prev
+
+        for _ in range(max_iter):
+            nbr_min = (
+                sym.join(labels, sym.b == labels.id)
+                .groupBy("a")
+                .agg(F.min("component").alias("_nbr"))
             )
-            .localCheckpoint()
-        )
-        changed = merged.where(F.col("_new") < F.col("component")).count()
-        _release(prev)
-        prev = merged
-        labels = merged.select("id", F.col("_new").alias("component"))
-        if changed == 0:
-            _release(sym)
-            return labels
+            merged = scope.own(
+                labels.join(nbr_min, labels.id == nbr_min.a, "left")
+                .select(
+                    "id",
+                    "component",
+                    F.least("component", F.coalesce("_nbr", "component")).alias("_new"),
+                )
+                .localCheckpoint()
+            )
+            changed = merged.where(F.col("_new") < F.col("component")).count()
+            # the round just checkpointed supersedes the previous one
+            scope.release(prev)
+            prev = merged
+            labels = merged.select("id", F.col("_new").alias("component"))
+            if changed == 0:
+                return labels.localCheckpoint()
     raise RuntimeError(
         f"connected_components: no convergence in {max_iter} rounds "
         "(graph diameter exceeds max_iter)"
     )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14): → (id, component)
-    with the SAME canonical min-id labeling as
-    :func:`connected_components`, but converging in O(log n) rounds on
-    any graph — the drop-in for long-diameter inputs (spatial chains,
-    road networks, ``range_join``→CC compositions) where min-label
-    propagation needs O(diameter) rounds.
-
-    Per round both operations are a groupBy-min plus an equi-join on the
-    node key — the identical shuffle shape as the label-propagation
-    algorithm, just over a shrinking edge list. Convergence: the edge
-    set reaches a fixpoint in which every component is a star rooted at
-    its minimum id; the roots are then the component labels.
-    """
-    from ..util import release_checkpoint as _release
-
-    # canonical (big, small) orientation, deduplicated
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = e
-    converged = False
-    for _ in range(max_iter):
-        # large-star: every center links its LARGER neighbors to
-        # m = min(N(center) ∪ {center}) — output keeps (big, small)
-        sym = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("_mn")).select(
-            "u", F.least("u", "_mn").alias("m")
-        )
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: group by the big endpoint over its smaller
-        # neighbors; link them AND the center to the minimum
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        withm = large.join(mins2, "u")
-        small = (
-            withm.select(F.col("v").alias("x"), "m")
-            .union(withm.select(F.col("u").alias("x"), "m"))
-            .where(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        converged = small.exceptAll(e).isEmpty() and e.exceptAll(small).isEmpty()
-        _release(prev)
-        prev = small
-        e = small
-        if converged:
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star: no convergence in {max_iter} rounds"
-        )
-    # at the fixpoint every edge is (member, root): labels fall out
-    labels = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("id")).distinct().select(
-        "id", F.col("id").alias("component")
-    )
-    out = labels.union(roots)
-    if vertices is not None:
-        vs = vertices.select(F.col(vertices.columns[0]).alias("id")).distinct()
-        missing = vs.join(out.select("id"), "id", "left_anti").select(
-            "id", F.col("id").alias("component")
-        )
-        out = out.union(missing)
-    return out.distinct()

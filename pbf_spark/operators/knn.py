@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..spatial import hexgrid
+from ..util import CallScope
 from .spatial import hex_cell_udf
 
 DIST_M = "dist_m"
@@ -91,19 +92,17 @@ def knn_join(
     id_col: str = "id",
     max_rounds: int = 3,
     start_ring: int = 2,
-    eager: bool = True,
 ) -> DataFrame:
     """→ (query_id, {id_col}, dist_m, rank) with rank 1..k per query.
 
     ``points`` needs (id_col, lat, lon); ``queries`` needs
     (query_id, lat, lon). Deterministic: ties broken by entity id.
 
-    ``eager`` (default): the result is localCheckpointed and the
-    operator's internal caches (cell-indexed points, per-round remaining
-    queries) are released before returning — the expansion loop is
-    inherently iterative, so without this the caches would outlive the
-    call. Pass eager=False to keep the plan lazy (caller manages caches
-    via spark.catalog.clearCache()).
+    The result comes back materialized (an eager ``localCheckpoint`` the
+    caller owns). The expansion loop is iterative, so it caches the
+    cell-indexed points and each round's remaining queries and ranked
+    candidates; those caches belong to the call and are freed before it
+    returns, or when it raises.
 
     Scale note: each expansion round issues one driver action
     (``remaining.isEmpty()``) to decide whether to widen the ring, so
@@ -111,104 +110,106 @@ def knn_join(
     plus one brute-force fallback job for stragglers) — constant in the
     data size; only the per-round candidate join scales with the data.
     """
-    pts = points.select(
-        F.col(id_col).alias("_p_id"),
-        F.col("lat").alias("_p_lat"),
-        F.col("lon").alias("_p_lon"),
-    ).withColumn("_p_cell", hex_cell_udf(res)(F.col("_p_lat"), F.col("_p_lon")))
-    pts = pts.cache()
-    cached = [pts]
+    with CallScope() as scope:
+        pts = points.select(
+            F.col(id_col).alias("_p_id"),
+            F.col("lat").alias("_p_lat"),
+            F.col("lon").alias("_p_lon"),
+        ).withColumn("_p_cell", hex_cell_udf(res)(F.col("_p_lat"), F.col("_p_lon")))
+        pts = scope.own(pts.cache())
 
-    # cache round-1's query frame too: the expansion loop references it
-    # from several actions (candidate join per round, done-id semi/anti
-    # joins, the final union materialization), and without the cache
-    # each one re-executes the caller's ENTIRE query-side pipeline —
-    # for queries derived from a repartitioned fact scan that is a full
-    # exchange of the fact table per action
-    remaining = queries.select(
-        "query_id", F.col("lat").alias("_q_lat"), F.col("lon").alias("_q_lon")
-    ).withColumn("_q_cell", hex_cell_udf(res)(F.col("_q_lat"), F.col("_q_lon"))).cache()
-    cached.append(remaining)
-
-    # guaranteed covered disc radius around any point of the query cell
-    # after a k-ring of radius r. Provable margin: gnomonic radial
-    # compression dgeo/dplane = cos^2(theta) is minimized at the face
-    # corners (theta_max ~ 37.4 deg for the icosahedron → cos^2 ~ 0.631),
-    # so geo distance ≥ 0.6 × plane distance everywhere on a face; r rings
-    # cover r × min-width in plane units from any point of the center
-    # cell; the 2-circumradius subtraction bounds the in-cell offset
-    # (plane ≥ geo for the subtracted term, also conservative).
-    nominal_width = hexgrid.hex_edge_m(res) * float(np.sqrt(3.0))
-
-    def covered_m(r: int) -> float:
-        return max(0.0, r * 0.6 * nominal_width - 2 * hexgrid.hex_edge_m(res))
-
-    results = []
-    ring = start_ring
-    for _ in range(max_rounds):
-        cand = (
-            remaining.withColumn("_cells", _ring_cells_udf(res, ring)(F.col("_q_cell")))
-            .withColumn("_cell", F.explode("_cells"))
-            .drop("_cells")
-            .join(pts, F.col("_cell") == F.col("_p_cell"))
-            .withColumn(
-                DIST_M,
-                haversine_udf(
-                    F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")
-                ),
+        # cache round-1's query frame too: the expansion loop references it
+        # from several actions (candidate join per round, done-id semi/anti
+        # joins, the final union materialization), and without the cache
+        # each one re-executes the caller's ENTIRE query-side pipeline —
+        # for queries derived from a repartitioned fact scan that is a full
+        # exchange of the fact table per action
+        remaining = scope.own(
+            queries.select(
+                "query_id", F.col("lat").alias("_q_lat"), F.col("lon").alias("_q_lon")
             )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col(DIST_M).asc(), F.col("_p_id").asc())
-        # cache: ≤ k rows per query, but its subtree is the round's whole
-        # candidate join — consumed by stats, the done-id semi join and
-        # the final union (3+ executions otherwise)
-        ranked = cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k).cache()
-        cached.append(ranked)
-        stats = ranked.groupBy("query_id").agg(
-            F.count("*").alias("_n"), F.max(DIST_M).alias("_kth")
-        )
-        done_ids = stats.where(
-            (F.col("_n") >= k) & (F.col("_kth") <= F.lit(covered_m(ring)))
-        ).select("query_id")
-        results.append(
-            ranked.join(F.broadcast(done_ids), "query_id", "left_semi").select(
-                "query_id", F.col("_p_id").alias(id_col), DIST_M, "rank"
-            )
-        )
-        remaining = remaining.join(F.broadcast(done_ids), "query_id", "left_anti").cache()
-        cached.append(remaining)
-        if remaining.isEmpty():
-            remaining = None
-            break
-        ring *= 2
-
-    if remaining is not None and not remaining.isEmpty():
-        # exact fallback: cross join the stragglers (few) against all points
-        brute = (
-            F.broadcast(remaining)
-            .crossJoin(pts)
-            .withColumn(
-                DIST_M,
-                haversine_udf(
-                    F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")
-                ),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col(DIST_M).asc(), F.col("_p_id").asc())
-        results.append(
-            brute.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", F.col("_p_id").alias(id_col), DIST_M, "rank")
+            .withColumn("_q_cell", hex_cell_udf(res)(F.col("_q_lat"), F.col("_q_lon")))
+            .cache()
         )
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        for df in cached:
-            df.unpersist()
-    return out
+        # guaranteed covered disc radius around any point of the query cell
+        # after a k-ring of radius r. Provable margin: gnomonic radial
+        # compression dgeo/dplane = cos^2(theta) is minimized at the face
+        # corners (theta_max ~ 37.4 deg for the icosahedron → cos^2 ~ 0.631),
+        # so geo distance ≥ 0.6 × plane distance everywhere on a face; r rings
+        # cover r × min-width in plane units from any point of the center
+        # cell; the 2-circumradius subtraction bounds the in-cell offset
+        # (plane ≥ geo for the subtracted term, also conservative).
+        nominal_width = hexgrid.hex_edge_m(res) * float(np.sqrt(3.0))
+
+        def covered_m(r: int) -> float:
+            return max(0.0, r * 0.6 * nominal_width - 2 * hexgrid.hex_edge_m(res))
+
+        results = []
+        ring = start_ring
+        for _ in range(max_rounds):
+            cand = (
+                remaining.withColumn("_cells", _ring_cells_udf(res, ring)(F.col("_q_cell")))
+                .withColumn("_cell", F.explode("_cells"))
+                .drop("_cells")
+                .join(pts, F.col("_cell") == F.col("_p_cell"))
+                .withColumn(
+                    DIST_M,
+                    haversine_udf(
+                        F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")
+                    ),
+                )
+            )
+            w = Window.partitionBy("query_id").orderBy(F.col(DIST_M).asc(), F.col("_p_id").asc())
+            # cache: ≤ k rows per query, but its subtree is the round's whole
+            # candidate join — consumed by stats, the done-id semi join and
+            # the final union (3+ executions otherwise)
+            ranked = scope.own(
+                cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k).cache()
+            )
+            stats = ranked.groupBy("query_id").agg(
+                F.count("*").alias("_n"), F.max(DIST_M).alias("_kth")
+            )
+            done_ids = stats.where(
+                (F.col("_n") >= k) & (F.col("_kth") <= F.lit(covered_m(ring)))
+            ).select("query_id")
+            results.append(
+                ranked.join(F.broadcast(done_ids), "query_id", "left_semi").select(
+                    "query_id", F.col("_p_id").alias(id_col), DIST_M, "rank"
+                )
+            )
+            remaining = scope.own(
+                remaining.join(F.broadcast(done_ids), "query_id", "left_anti").cache()
+            )
+            if remaining.isEmpty():
+                remaining = None
+                break
+            ring *= 2
+
+        # non-None only after the loop's own isEmpty() found stragglers
+        if remaining is not None:
+            # exact fallback: cross join the stragglers (few) against all points
+            brute = (
+                F.broadcast(remaining)
+                .crossJoin(pts)
+                .withColumn(
+                    DIST_M,
+                    haversine_udf(
+                        F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")
+                    ),
+                )
+            )
+            w = Window.partitionBy("query_id").orderBy(F.col(DIST_M).asc(), F.col("_p_id").asc())
+            results.append(
+                brute.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= k)
+                .select("query_id", F.col("_p_id").alias(id_col), DIST_M, "rank")
+            )
+
+        out = results[0]
+        for r in results[1:]:
+            out = out.unionByName(r)
+        return out.localCheckpoint(eager=True)
 
 
 def range_join(

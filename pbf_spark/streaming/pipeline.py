@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..lineage import append_lineage
 from ..model.schema import DOCUMENT_SCHEMA
 from ..operators.decode import decode_documents
+from ..util import CallScope
 
 
 def stream_decode_documents(
@@ -58,16 +59,15 @@ def stream_decode_documents(
     docs_stream = reader.parquet(str(Path(docs_table_dir) / "data"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        entities = decode_documents(
-            batch_df, media_blobs, partitions=partitions, tag_filter=tag_filter
-        )
-        entities.persist()
-        try:
+        with CallScope() as scope:
+            entities = scope.own(
+                decode_documents(
+                    batch_df, media_blobs, partitions=partitions, tag_filter=tag_filter
+                ).persist()
+            )
             entities.write.mode("append").parquet(str(output_dir))
             if lineage_dir is not None:
                 append_lineage(entities, run_id, lineage_dir, batch_id)
-        finally:
-            entities.unpersist()
 
     query = (
         docs_stream.writeStream.foreachBatch(process_batch)

@@ -1,3 +1,4 @@
+import gc
 import json
 from pathlib import Path
 
@@ -11,6 +12,19 @@ from pbf_spark.session import get_spark
 def spark():
     s = get_spark(app_name="pbf_spark-tests", master="local[4]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def stored_rdds(spark):
+    """Counter of the RDDs the session stores: materialized
+    ``persist()``ed frames and ``localCheckpoint``s alike. Storage is
+    emptied first (SQL cache cleared, unreferenced RDDs collected), so a
+    test counts from what is still live, not from what earlier tests
+    happened to leave."""
+    spark.catalog.clearCache()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    return lambda: len(spark.sparkContext._jsc.getPersistentRDDs())
 
 
 @pytest.fixture(scope="session")

@@ -35,61 +35,51 @@ def test_cc_without_vertices_only_endpoints(spark):
     assert got == {5: 5, 6: 5, 7: 5}
 
 
-def test_cc_long_path_converges(spark):
+def test_cc_long_path_converges(spark, stored_rdds):
     # diameter 19: min label must walk the whole path
     edges = small_df(spark, [(i, i + 1) for i in range(1, 20)], EDGE_SCHEMA)
+    before = stored_rdds()
     got = _cc_map(connected_components(edges, max_iter=25))
     assert set(got.values()) == {1} and len(got) == 20
+    # every round's checkpoint is freed; only the result's stays
+    assert stored_rdds() - before <= 1
 
 
-def test_cc_max_iter_raises(spark):
+def test_cc_max_iter_raises(spark, stored_rdds):
     edges = small_df(spark, [(i, i + 1) for i in range(1, 12)], EDGE_SCHEMA)
+    before = stored_rdds()
     with pytest.raises(RuntimeError, match="convergence"):
         connected_components(edges, max_iter=2)
+    assert stored_rdds() == before  # a failed call keeps nothing
 
 
-def test_cc_star_matches_label_propagation(spark):
-    """Large-star/small-star must produce the identical canonical
-    labeling on the existing fixtures (VERDICT r5 item 4)."""
-    from pbf_spark.operators.graph import connected_components_star
+def _union_find(edges):
+    parent = {}
 
-    edges = small_df(
-        spark,
-        [(2, 1), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (11, 10)],
-        EDGE_SCHEMA,
-    )
-    verts = small_df(spark, [(1,), (2,), (3,), (4,), (10,), (11,), (12,), (99,)], "id long")
-    assert _cc_map(connected_components_star(edges, vertices=verts)) == _cc_map(
-        connected_components(edges, vertices=verts)
-    )
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-
-def test_cc_star_long_path_log_rounds(spark):
-    """Diameter-200 path: min-label needs 200 rounds; the contraction
-    must converge well inside 12 (O(log n)) with the same labels."""
-    from pbf_spark.operators.graph import connected_components_star
-
-    edges = small_df(spark, [(i, i + 1) for i in range(1, 201)], EDGE_SCHEMA)
-    got = _cc_map(connected_components_star(edges, max_iter=12))
-    assert set(got.values()) == {1} and len(got) == 201
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
 
 
-def test_cc_star_random_graph_equivalence(spark):
-    """Deterministic pseudo-random graph: both algorithms must agree on
-    the full (id -> min-id component) mapping."""
-    from pbf_spark.operators.graph import connected_components_star
-
-    edges = small_df(
-        spark,
-        [((i * 2654435761) % 97, (i * 40503 + 7) % 97) for i in range(60)],
-        EDGE_SCHEMA,
-    )
-    assert _cc_map(connected_components_star(edges)) == _cc_map(
-        connected_components(edges, max_iter=97)
-    )
+def test_cc_random_graph_matches_union_find(spark):
+    """Deterministic pseudo-random graph: the full (id -> min-id
+    component) mapping equals a sequential union-find's."""
+    pairs = [((i * 2654435761) % 97, (i * 40503 + 7) % 97) for i in range(60)]
+    edges = small_df(spark, pairs, EDGE_SCHEMA)
+    expected = _union_find([(a, b) for a, b in pairs if a != b])
+    assert _cc_map(connected_components(edges, max_iter=97)) == expected
 
 
-def test_near_dup_clusters_end_to_end(spark):
+def test_near_dup_clusters_end_to_end(spark, stored_rdds):
     from pbf_spark.operators.dedup import near_dup_clusters
 
     base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -103,7 +93,10 @@ def test_near_dup_clusters_end_to_end(spark):
         ],
         "doc_id long, text string",
     )
+    before = stored_rdds()
     rows = {r["doc_id"]: r for r in near_dup_clusters(docs).collect()}
+    # LSH caches, pairs and CC rounds are freed; the labels' checkpoint stays
+    assert stored_rdds() - before <= 1
     assert rows[1]["cluster_id"] == 1 and rows[1]["is_rep"]
     assert rows[2]["cluster_id"] == 1 and not rows[2]["is_rep"]
     assert rows[3]["cluster_id"] == 1

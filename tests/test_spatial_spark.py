@@ -135,12 +135,15 @@ def test_knn_matches_exhaustive_oracle(spark, fixture_dir, nodes, nodes_np):
         np.testing.assert_allclose(sub["dist_m"].to_numpy(), d[order], rtol=1e-9)
 
 
-def test_knn_exactly_k_rows_per_query(spark, fixture_dir, nodes):
+def test_knn_exactly_k_rows_per_query(spark, fixture_dir, nodes, stored_rdds):
     queries = spark.read.parquet(str(fixture_dir / "query_points.parquet")).limit(60)
+    before = stored_rdds()
     got = knn.knn_join(nodes, queries, k=5)
     counts = got.groupBy("query_id").count()
     assert counts.filter("count != 5").count() == 0
     assert counts.count() == 60
+    # the per-round caches are freed; only the result's checkpoint stays
+    assert stored_rdds() - before <= 1
 
 
 def test_tiles_partition_invariant(nodes):

@@ -30,7 +30,8 @@ def test_exact_dedup_groups(near_dup_docs):
     assert sum(out.values()) == 6
 
 
-def test_minhash_lsh_pairs_finds_near_dups(near_dup_docs):
+def test_minhash_lsh_pairs_finds_near_dups(near_dup_docs, stored_rdds):
+    before = stored_rdds()
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in dedup.minhash_lsh_pairs(near_dup_docs, threshold=0.3).collect()
@@ -38,6 +39,31 @@ def test_minhash_lsh_pairs_finds_near_dups(near_dup_docs):
     assert pairs[(1, 4)] == 1.0
     assert 0.5 < pairs[(1, 2)] < 1.0
     assert (1, 3) not in pairs and (2, 3) not in pairs
+    # the signature and shingle caches are freed; the pairs' checkpoint stays
+    assert stored_rdds() - before <= 1
+
+
+def test_minhash_lsh_pairs_concurrent_calls(near_dup_docs, stored_rdds):
+    """Two calls at once on one session: identical inputs make identical
+    cache plans, so one call's release must not cost the other its
+    answer, and neither may leave its caches behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def run():
+        return sorted(
+            tuple(r) for r in dedup.minhash_lsh_pairs(near_dup_docs, threshold=0.3).collect()
+        )
+
+    spark = near_dup_docs.sparkSession
+    expected = run()
+    spark.catalog.clearCache()
+    before = stored_rdds()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(run) for _ in range(2)]
+        got = [f.result(timeout=600) for f in futures]
+    assert got == [expected, expected]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert stored_rdds() - before <= 2  # the two results' checkpoints at most
 
 
 def test_minhash_lsh_hot_bucket_refinement(spark):
